@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's session contract: every entry point (Verify, Bench,
-  * the Probe tools, the test suite, and a production deploy) pins
+  * `graft.tools.Probe`, the test suite, and a production deploy) pins
   * these confs AT SESSION BUILD. Table readers are pure — they
   * validate the contract and fail fast with guidance, but never
   * mutate session state (a library whose reads flip session confs

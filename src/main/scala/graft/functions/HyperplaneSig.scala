@@ -71,7 +71,7 @@ case class HyperplaneSketch(child: Expression, bits: Int, dim: Int)
   * bands·bandBits ≤ 64 the buckets are bit-identical to extracting
   * `(sig >> j·bandBits) & mask` from `HyperplaneSig(v, bands·bandBits,
   * dim)` (spec-pinned), so the certified ≤64-bit queries are unchanged
-  * — but the TOTAL bit budget is now unbounded (ProbeKnn law #1: past
+  * — but the TOTAL bit budget is now unbounded (`Probe knn` law #1: past
   * ~2M vectors at dim 64, per-band bucket count must keep scaling and
   * one 64-bit word is structurally exhausted). Each band's bucket is
   * its own long, so `bandBits` may go to 62 without word-spanning
@@ -299,32 +299,6 @@ object HyperplaneSig {
           if (t - 1 < bandBits) bucket ^ (1L << order(t - 1)) else bucket
         t += 1
       }
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Banded buckets with a global band OFFSET — [[computeBuckets]]
-    * whose band j is global band (offset+j): plane index
-    * i = (offset+j)·bandBits + r (Java-static for codegen). offset=0
-    * is bit-identical to [[computeBuckets]]. */
-  def computeBucketsOff(a: ArrayData, bands: Int, bandBits: Int, dim: Int,
-      offset: Int): ArrayData = {
-    val n = math.min(dim, a.numElements())
-    val out = new Array[Long](bands)
-    var j = 0
-    while (j < bands) {
-      var bucket = 0L
-      var r = 0
-      while (r < bandBits) {
-        val i = (offset + j) * bandBits + r
-        var s = 0.0
-        var d = 0
-        while (d < n) { s += a.getDouble(d) * coeff(i, d, dim); d += 1 }
-        if (s > 0) bucket |= (1L << r)
-        r += 1
-      }
-      out(j) = bucket
       j += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)

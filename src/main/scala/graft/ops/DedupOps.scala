@@ -258,12 +258,6 @@ object DedupOps {
 
   // -------------------------------------------------------------- minhash
 
-  /** Per-doc minhash signature columns m0..m{K-1} over the
-    * discriminative shingle set.
-    */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    sigFromShingles(discriminativeShingles(docs, idCol, textCol))
-
   /** Per-id K-column signature of an exploded (id, h) shingle table. */
   private def sigFromShingles(sh: DataFrame): DataFrame = {
     val h = col("h") % P

@@ -59,8 +59,6 @@ object HashedEmbedder extends Embedder {
 final class TermVectorEmbedder private (
     val dim: Int, table: Map[String, Array[Float]]) extends Embedder {
 
-  def termVector(w: String): Option[Array[Float]] = table.get(w)
-
   def embed(text: String): Array[Float] = {
     // lowercase through UTF8String.toLowerCase — the routine Spark's
     // lower() (and TextOps.words) runs

@@ -181,8 +181,8 @@ object PcaOps {
         // the iterate fell below the ~t·1e-6 Gram–Schmidt leakage floor
         // (from the quantized basis) and all late components collapsed
         // onto span(earlier) with |<vi,vj>| ≈ 1 (tmp/probeann_r13b.log's
-        // 0.064 rotation-sanity row; ProbeRot). Axis starts keep the
-        // residual mass O(1) at every t.
+        // 0.064 rotation-sanity row; `Probe ann`'s SANITY row). Axis
+        // starts keep the residual mass O(1) at every t.
         var v =
           if (t == 0) Array.fill(dim)(quant(1.0 / math.sqrt(dim.toDouble)))
           else Array.tabulate(dim)(j => if (j == t % dim) 1.0 else 0.0)

@@ -112,7 +112,7 @@ object SimilarityOps {
     * frontier past bucketing methods on spread-out (near-isotropic)
     * embeddings, where IVF/LSH recall ≈ candidate fraction by
     * construction (no cell structure to exploit; measured in
-    * ProbeAnn). Every (query, corpus) pair is screened on a
+    * `Probe ann`). Every (query, corpus) pair is screened on a
     * `bits`-bit hyperplane sketch (packed longs, POPCNT distance:
     * ~bits/64 integer ops vs `dim` FMAs per exact dot — 16× less
     * arithmetic at 256 bits / 64 dims); only pairs within
@@ -131,7 +131,7 @@ object SimilarityOps {
     * σ = sqrt(bits·p·(1−p)); unrelated pairs sit at bits/2. At 256
     * bits, threshold 115 passes ≥98% of cos≥0.35 neighbors and ~5% of
     * noise (recall ≥0.95 at ~0.05× exact-scoring cost, measured in
-    * ProbeAnn). Queries whose true k-th neighbor is weaker than the
+    * `Probe ann`). Queries whose true k-th neighbor is weaker than the
     * radius may return fewer than k rows — the radius is the recall
     * contract.
     *
@@ -747,7 +747,7 @@ object SimilarityOps {
     * the vector by the codegen'd [[graft.functions.HyperplaneBuckets]]
     * kernel — no intermediate packed signature, so the total bit
     * budget `bands · bandBits` is UNBOUNDED (the round-10 64-bit
-    * ceiling, ProbeKnn law #1). For bands·bandBits ≤ 64 the buckets
+    * ceiling, `Probe knn` law #1). For bands·bandBits ≤ 64 the buckets
     * are bit-identical to the retired `(sig >> j·bandBits) & mask`
     * extraction (spec-pinned), so every certified ≤64-bit oracle is
     * unchanged.
@@ -882,7 +882,7 @@ object SimilarityOps {
     * contract: pairs between two dropped members of the same bucket are
     * lost in that band — the identical trade the df-cap makes for
     * shingles, bounded by OR-amplification across bands and measured in
-    * ProbeKnn's planted-mega-bucket run. Ids are assumed nonnegative
+    * `Probe knn`'s planted-mega-bucket run. Ids are assumed nonnegative
     * (every id column in the engine is), keeping `%` = pmod in both
     * engines.
     */
@@ -891,7 +891,7 @@ object SimilarityOps {
     val M = 2147483647L
     // bucket reduced mod M BEFORE its multiply: a 32-bit bucket id
     // (bandBits > 31) times the mixing constant overflows Long —
-    // ProbeKnn's 2x32 config found this as an ANSI ARITHMETIC_OVERFLOW
+    // `Probe knn`'s 2x32 config found this as an ANSI ARITHMETIC_OVERFLOW
     // where DuckDB's HUGEINT would have silently diverged instead.
     // For bucket < M (every certified config: 6-bit buckets) the
     // reduction is the identity, so existing oracles are unchanged.
@@ -1233,7 +1233,7 @@ object SimilarityOps {
     * rides both joins; vectors attach once for the rerank (two-phase
     * discipline). Certified against an unrolled one-round oracle
     * (q_knn_graph_refine); the measured recall delta at 1M lands in
-    * ProbeKnn/PERF.md.
+    * `Probe knn`/PERF.md.
     */
   def knnGraphRefineRaw(
       vectors: DataFrame, idCol: String, vecCol: String, k: Int,
@@ -1273,7 +1273,7 @@ object SimilarityOps {
     def stagedGroups: Int = math.ceil(bands.toDouble / groupBands).toInt
   }
 
-  /** Encode the measured ProbeKnn law as a planner.
+  /** Encode the measured `Probe knn` law as a planner.
     *
     * The law, from the committed probe rows (PERF.md):
     *  1. BUCKET COUNT SCALES WITH N: candidates per band ≈
@@ -1315,7 +1315,7 @@ object SimilarityOps {
   /** Law #2+#3: modeled recall of (bands × bandBits, probes) for
     * neighbors at `neighborCos` — OR-amplification over
     * bands·(1 + 0.8·(probes−1)) effective bands (the measured ≈0.8-band
-    * lift per 1-flip probe). Pinned against the measured ProbeKnn rows
+    * lift per 1-flip probe). Pinned against the measured `Probe knn` rows
     * in SimilarityOpsSpec: the neighborCos implied by one 5M row
     * predicts the other within the probe's tolerance.
     */
@@ -1336,7 +1336,7 @@ object SimilarityOps {
   /** Law #1 with the measured skew: candidate volume of a capped
     * multi-probe graph build ≈ skew · bands · probes · N · min(occ,
     * cap), occ = N/2^bandBits. The 3.5 skew constant is fitted to the
-    * committed ProbeKnn counts (620.7M measured vs 190M uniform-ideal
+    * committed `Probe knn` counts (620.7M measured vs 190M uniform-ideal
     * at 5M 8×20c16; 244.5M vs 61M at 1M 4×16): real bucket occupancy
     * is heavy-tailed, so Σ|b_q|·min(|b_c|, cap) exceeds the uniform
     * estimate by a corpus-shape factor that measured 3.3–4.0× on both

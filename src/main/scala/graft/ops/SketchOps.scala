@@ -72,7 +72,7 @@ object SketchOps {
       .groupBy(col("grp"), col("idx"))
       .agg(max(col("rank")).as("reg"))
 
-  /** (grp, idx, rank) projection shared by the register builders. A
+  /** (grp, idx, rank) projection of the register builder. A
     * NULL key null-propagates through md5 → polyHash → idx/rank, so
     * null keys land in the (grp, idx=NULL) bucket rather than a
     * register.
@@ -92,20 +92,6 @@ object SketchOps {
       .otherwise(lit(W + 1) - length(bin(rest)))
     df.select(col(groupCol).as("grp"), idx.as("idx"), rank.as("rank"))
   }
-
-  /** Fused register + row/null-count kernel for the sketch profiler:
-    * ONE pass, ONE shuffle of ≤ groups·(m+1) rows — (grp, idx, reg,
-    * cnt) where the idx=NULL bucket carries the null-key count (max
-    * ignores the null ranks there, so `reg` is NULL for it). Row count
-    * per group = Σ cnt; null count = cnt at idx NULL; the register
-    * table = rows with idx NOT NULL. This is the shape that lets the
-    * 100 TB profiler keep constant aggregation state per column AND
-    * avoid a second scan for the exact counts.
-    */
-  def hllRegistersCounted(df: DataFrame, groupCol: String, keyCol: String): DataFrame =
-    hllHashed(df, groupCol, keyCol)
-      .groupBy(col("grp"), col("idx"))
-      .agg(max(col("rank")).as("reg"), count(lit(1)).as("cnt"))
 
   /** Register table → (grp, est) with the UNROUNDED estimate column —
     * the shared read-off both certified shapes (with and without the
@@ -342,18 +328,12 @@ object SketchOps {
     * `groupBy().count()` over the per-word cells — integer sums, so
     * micro-batch partials add to the same sketch
     * ([[graft.queries.StreamQueries.q_stream_cms]] certifies this
-    * against the batch oracle). Input: a `w` word column. The base
-    * hash is projected once per word; each of the d cells is a cheap
-    * 3-op remix of it, and the partial aggregation folds the exploded
-    * cells to ≤ d·w rows per partition before any shuffle (or state
-    * store) sees them.
-    */
-  def cmsSketch(words: DataFrame): DataFrame =
-    cmsSketchFromHashes(words.select(TextOps.wordHash(col("w")).as("wh")))
-
-  /** Sketch build from the RAW per-token hashes (`wh` long column —
-    * the [[TextOps.wordHashes]] explode): the form streaming and batch
-    * builds share once tokens stop being materialized.
+    * against the batch oracle). Input: the RAW per-token hashes (`wh`
+    * long column — the [[TextOps.wordHashes]] explode), the form
+    * streaming and batch builds share. Each of the d cells is a cheap
+    * 3-op remix of the base hash, and the partial aggregation folds the
+    * exploded cells to ≤ d·w rows per partition before any shuffle (or
+    * state store) sees them.
     */
   def cmsSketchFromHashes(hashes: DataFrame): DataFrame = {
     val withH = hashes.select((col("wh") % Mersenne).as("h0"))

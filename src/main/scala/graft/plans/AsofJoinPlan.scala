@@ -230,8 +230,9 @@ case class AsofJoinExec(
   // them, exactly as it does for SortMergeJoin) and sort (keys…, ts) —
   // the operator itself is then a single streaming merge pass.
   // AQE interaction: Spark 4.1's result-stage optimization DOES insert
-  // coalesced AQEShuffleReads under this exec (observed in JoinOpsSpec;
-  // earlier mid-plan stages don't — ProbeAsofAqe). Alignment of the
+  // coalesced AQEShuffleReads under this exec (pinned by JoinOpsSpec's
+  // coalescing test; with the exec under an aggregate none were seen —
+  // PERF.md, native whole-operator as-of join). Alignment of the
   // zipped partitions still holds: CoalesceShufflePartitions computes
   // ONE partition-spec list for ALL leaf shuffles of a stage and
   // applies it uniformly or not at all — the same invariant

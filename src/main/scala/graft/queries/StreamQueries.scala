@@ -152,7 +152,8 @@ object StreamQueries {
     * matched rows on match (as the inner join), and purchases with NO
     * same-user click in the preceding 30 minutes emit a null-click row
     * once the watermark proves no matching click can still arrive
-    * (left time < watermark). PROBED, not assumed (ProbeOuterJoin):
+    * (left time < watermark). PROBED with a StreamingQueryListener, not
+    * assumed (PERF.md, round-4 notes):
     * each `withWatermark` sits on an already-FILTERED branch, so its
     * node only sees its own event subset and the global watermark is
     * min(max click ts, max purchase ts, ms-floored) - 1h — a branch
@@ -1049,9 +1050,9 @@ object StreamQueries {
     *    batch b-1 — i.e. max event time through batch b-2
     *    (SPARK-42376's two-watermark protocol; one-batch-late rows
     *    always survive) — with an INCLUSIVE boundary
-    *    (`window.end <= wm` drops; probed empirically in
-    *    tools/ProbeLate, where a window ending exactly AT the filter
-    *    watermark was dropped);
+    *    (`window.end <= wm` drops; probed empirically — PERF.md,
+    *    "Retired probe tools" — where a window ending exactly AT the
+    *    filter watermark was dropped);
     *  - a window EMITS once `window.end <= eviction wm`, and the
     *    trailing AvailableNow no-data batch advances the watermark to
     *    the global max, flushing every closed window.

@@ -135,7 +135,7 @@ object VectorQueries {
 
   /** WIDE-signature banding config: 16 bands × 8 bits = 128 planes —
     * past the retired one-word ceiling (`bands·bandBits ≤ 64`,
-    * round-10's one weak-at-100× component). Per ProbeKnn law #1,
+    * round-10's one weak-at-100× component). Per `Probe knn` law #1,
     * per-band bucket count must scale with N; the certified grid keeps
     * 2⁸ buckets per band (binding collisions at sf corpus sizes) while
     * the SAME kernel serves 16×16 = 65536-bucket bands at the 1M+
@@ -149,7 +149,7 @@ object VectorQueries {
     * so full recall there would cost 10× the bands the probe scale
     * needs). The require makes planner drift a LOUD failure (every
     * wide oracle bakes 16×8 hyperplane literals); the spec pins the
-    * planner's laws against the measured ProbeKnn rows.
+    * planner's laws against the measured `Probe knn` rows.
     */
   private[queries] val WidePlan = SimilarityOps.planLshConfig(
     nVectors = 2048, dim = 64, targetRecall = 0.45, maxProbes = 1)
@@ -278,7 +278,7 @@ object VectorQueries {
     * replays the identical cap rule (same Mersenne-mod hash, same
     * ROW_NUMBER tie-break), so the recall contract "top-k OF THE
     * CAPPED CANDIDATE SET" is itself certified; the recall delta and
-    * the mega-bucket wall numbers are measured in ProbeKnn (PERF.md).
+    * the mega-bucket wall numbers are measured in `Probe knn` (PERF.md).
     */
   val q_knn_graph_capped = QueryDef(
     "q_knn_graph_capped", {
@@ -319,7 +319,7 @@ object VectorQueries {
     * packed BIGINT, exactly as the engine's
     * [[graft.functions.HyperplaneBuckets]] computes them. 16-band
     * OR-amplification over 2⁸-bucket bands: more, finer bands than the
-    * 6×6 grid — the direction ProbeKnn's 1M/5M walls demand (bucket
+    * 6×6 grid — the direction `Probe knn`'s 1M/5M walls demand (bucket
     * count scaling with N needs total bits well past 64).
     */
   val q_knn_graph_wide = QueryDef(
@@ -522,7 +522,7 @@ object VectorQueries {
     * oracle replays margins → buckets → flips → cap survivors →
     * candidates → rerank end-to-end from the 80-row literal hyperplane
     * table. This is the exact kernel the 5M ≥0.9-recall build runs
-    * (ProbeKnn); certifying it at cert SF pins every rule the big
+    * (`Probe knn`); certifying it at cert SF pins every rule the big
     * build relies on.
     */
   val q_knn_graph_mpw = QueryDef(
@@ -590,7 +590,7 @@ object VectorQueries {
     * full capped-graph chain, the 2-hop expansion, the set-union, the
     * rerank — so "refinement only ever improves the graph toward
     * exact" is certified, not asserted. The measured recall delta at
-    * probe scale lands in ProbeKnn/PERF.md.
+    * probe scale lands in `Probe knn`/PERF.md.
     */
   val q_knn_graph_refine = QueryDef(
     "q_knn_graph_refine", {
@@ -764,7 +764,8 @@ object VectorQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  // M=8/K=16 probed as the recall/cost knee on this corpus (ProbePq:
+  // M=8/K=16 probed as the recall/cost knee on this corpus (an M/K
+  // sweep, PERF.md "Retired probe tools":
   // 4/8 → 0.06, 8/16 → 0.28, 16/32 → 0.48 recall@5 at rising cost) —
   // near-isotropic synthetic vectors are PQ's worst case, so the
   // probe, not a textbook default, picked the config
@@ -858,7 +859,7 @@ object VectorQueries {
     * PQ/OPQ (Jégou et al., Ge et al.) assumes. The serve metric is
     * UNCHANGED (cosine against the reconstruction — the engine's
     * output contract); only the quantizer's cell geometry switches.
-    * Measured against the cosine chain in ProbeAnn
+    * Measured against the cosine chain in `Probe ann`
     * ({unrotated, rotated} × {cosine, L2} grid, PERF.md).
     */
   val q_ann_pq_l2 = QueryDef(
@@ -1057,7 +1058,7 @@ object VectorQueries {
     * round-robined across the M sub-spaces — sub-space s codes
     * components (s, s+M, …), so each carries comparable energy (a
     * contiguous split would hand sub-space 0 nearly all of it and ADC
-    * collapses — measured in ProbeAnn). 1-based pc column indices,
+    * collapses — measured in `Probe ann`). 1-based pc column indices,
     * grouped by sub-space: [pc1, pc5, pc2, pc6, pc3, pc7, pc4, pc8]. */
   private val OpqPerm: Seq[Int] =
     (0 until OpqM).flatMap(s => (0 until OpqPcaM / OpqM).map(r => s + r * OpqM + 1))
@@ -1136,7 +1137,7 @@ object VectorQueries {
     // corpus mean is non-zero. Components are round-robined across the
     // M sub-spaces (balanced eigenvalue allocation): PCA orders them
     // by variance, and a contiguous split would give sub-space 0 all
-    // the energy (the OPQ-paper caveat, measured in ProbeAnn).
+    // the energy (the OPQ-paper caveat, measured in `Probe ann`).
     val proj = graft.ops.PcaOps.transformWith(
       emb, "vec_id", "embedding", 64, Array.fill(64)(0.0), comps)
       .select(col("vec_id"),
@@ -1462,7 +1463,7 @@ object VectorQueries {
 
   /** Hamming-sketch radius-prefiltered ANN
     * ([[SimilarityOps.sketchTopK]]) — the ≥0.9-recall-below-brute-wall
-    * config from the ProbeAnn frontier (256-bit sketch, radius 115:
+    * config from the `Probe ann` frontier (256-bit sketch, radius 115:
     * recall 0.976 on the bench corpus at ~0.05× exact-scoring cost).
     * Oracle: the ±1 hyperplane table is rendered as literals from the
     * same mix function; DuckDB replays per-plane signs → per-pair
@@ -2145,7 +2146,8 @@ object VectorQueries {
     * is parallel-Gram–Schmidt-corrected against the found ones every
     * round, so the oracle's per-round correction CTE replays the exact
     * driver arithmetic. The 4× energy-compacted columns are what
-    * PERF.md's ProbePca measures for recall against naive truncation.
+    * PERF.md's PCA-truncation section measures for recall against
+    * naive truncation.
     */
   val q_pca_transform = QueryDef(
     "q_pca_transform",

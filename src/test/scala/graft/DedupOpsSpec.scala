@@ -648,7 +648,7 @@ class DedupOpsSpec extends AnyFunSuite {
     // near-isotropic synthetic vectors are PQ's worst case; the floor
     // asserts the quantized ranking carries real signal (random top-5
     // picks from a 490-vector corpus would land ~0.01), not that it
-    // matches exact search (ProbePq maps the recall/cost curve:
+    // matches exact search (an M/K sweep mapped the recall/cost curve:
     // 0.18 here at sf0.001, 0.28 at sf0.01, rising with M/K)
     assert(recall >= 0.1, s"PQ recall too low: $recall")
   }

@@ -539,6 +539,54 @@ class JoinOpsSpec extends AnyFunSuite {
     assert(exec.metrics("matchedRows").value === 1L) // only (1, 20) matches
   }
 
+  test("native asof ≡ window asof under aggressive AQE partition coalescing") {
+    import org.apache.spark.sql.functions._
+    // coalescing must treat the exec's two shuffles as one co-partitioned
+    // group (as it does for SortMergeJoin) or the per-partition merge
+    // would pair wrong buckets: force it with a huge advisory size over
+    // inputs of very different sizes. 32 shuffle partitions leave room
+    // to coalesce below the test session's 4 cores (parallelism-first
+    // coalescing never goes under the default parallelism). Confs are
+    // restored afterwards.
+    val tuning = Seq(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256m",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+    val saved = tuning.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      tuning.foreach { case (k, v) => spark.conf.set(k, v) }
+      val nKeys = 500L
+      def series(n: Long, salt: Long) = spark.range(n).select(
+        pmod(col("id") * 2654435761L + salt, lit(nKeys)).as("k"),
+        (pmod(col("id") * 40503L + salt * 7L, lit(1000000000L)) * (n + 1) +
+          col("id")).as("ts"),
+        col("id").as("payload"))
+      val left = series(30000L, 1L)
+      val right = series(300L, 2L).select(col("k"), col("ts").as("rts"),
+        col("payload").as("payload_r"))
+      def rows(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
+        (r.getAs[Long]("k"), r.getAs[Long]("ts"), r.getAs[Long]("payload"),
+          Option(r.getAs[java.lang.Long]("payload_r")).map(_.longValue)))
+        .sortBy(_._3).toSeq
+      val native = JoinOps.asofJoinNative(left, right, "k", "ts", "rts", Seq("payload_r"))
+      // collect THIS frame (not a count over it) so the exec sits in the
+      // result stage and its adaptive plan is the final one
+      val got = rows(native.collect())
+      val want = rows(JoinOps.asofJoin(left, right, "k", "ts", "rts",
+        Seq("payload_r")).collect())
+      assert(got.length === 30000)
+      assert(got === want)
+      val plan = native.queryExecution.executedPlan.toString
+      assert(plan.contains("AQEShuffleRead"),
+        "no coalesced shuffle read under the as-of exec:\n" + plan.take(3000))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("AsofJoinPruning narrows both scans through the custom node") {
     import org.apache.spark.sql.functions._
     // left = orders (9 columns... actually 6), right = orders aggregated;
