@@ -24,9 +24,7 @@ object StreamQueries {
       |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (spark, dir) =>
     val stream = StreamingOps.eventsStream(spark, dir)
     val agg = StreamingOps.hourlyCounts(stream)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(agg, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(agg, OutputMode.Complete())
       .select(col("hour"), col("event_type"), col("n"),
         round(col("total_value"), 2).as("total_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -61,10 +59,8 @@ object StreamQueries {
       |GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin) { (spark, dir) =>
     val stream = StreamingOps.eventsStream(spark, dir)
     val agg = StreamingOps.hourlyCounts(stream, watermark = "1 hour")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToParquetSink(
-        agg, StreamingOps.tempSinkDir("graft_hourly_append_"))
-    }
+    StreamingOps.drainToParquetSink(
+      agg, StreamingOps.tempSinkDir("graft_hourly_append_"))._1
       .select(col("hour"), col("event_type"), col("n"),
         round(col("total_value"), 2).as("total_value"))
       .orderBy(col("hour"), col("event_type"))
@@ -78,10 +74,8 @@ object StreamQueries {
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema
     val stream = StreamingOps.parquetStream(spark, s"$dir/documents.parquet", schema)
       .select(md5(col("text")).as("hash"), col("doc_id").as("id"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(
-        StreamingOps.streamingDedupFirstSeen(spark, stream))
-    }.orderBy(col("keep_id"))
+    StreamingOps.drainToBatch(StreamingOps.streamingDedupFirstSeen(spark, stream))
+      .orderBy(col("keep_id"))
   }
 
   /** Stream–static enrichment join — the canonical streaming-enrich
@@ -107,9 +101,7 @@ object StreamQueries {
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("value_cents"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(enriched, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(enriched, OutputMode.Complete())
       .select(col("segment"), col("n"), col("value_cents"))
       .orderBy(col("segment"))
   }
@@ -139,11 +131,7 @@ object StreamQueries {
     val joined = StreamingOps.intervalJoin(
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour")
-    // stream-stream join keeps 4 state stores per partition — size the
-    // state layout to the drained volume
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(col("click_id"), col("purchase_id"), col("user_id"))
       .orderBy(col("click_id"), col("purchase_id"))
   }
@@ -204,9 +192,7 @@ object StreamQueries {
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour",
       joinType = "leftOuter")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
         col("purchase_id"), col("user_id"))
       .orderBy(col("purchase_id"), col("click_id"))
@@ -265,9 +251,7 @@ object StreamQueries {
       purchases, clicks, "purchase_ts", "click_ts",
       "user_id", "c_user", before = "30 MINUTES", watermark = "1 hour",
       joinType = "fullOuter")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(joined, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(joined, OutputMode.Append())
       .select(coalesce(col("click_id"), lit(-1L)).as("click_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(col("user_id"), col("c_user")).as("user_id"))
@@ -309,9 +293,7 @@ object StreamQueries {
     val stream = StreamingOps.eventsStream(spark, dir)
     val throttled = StreamingOps.streamingThrottle(
       spark, stream, ttlUs = 6L * 3600 * 1000000)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(throttled, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(throttled, OutputMode.Append())
       .select(col("user_id"), col("event_type"), col("event_id"),
         col("ts_us"))
       .orderBy(col("user_id"), col("event_type"), col("ts_us"), col("event_id"))
@@ -356,9 +338,7 @@ object StreamQueries {
       .withWatermark("ts", "1 hour")
       .groupBy(session_window(col("ts"), "30 minutes").as("sw"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(agg, OutputMode.Append())
-    }
+    StreamingOps.drainToBatch(agg, OutputMode.Append())
       .select(col("user_id"),
         unix_micros(col("sw.start")).as("session_start_us"),
         unix_micros(col("sw.end")).as("session_end_us"),
@@ -381,9 +361,7 @@ object StreamQueries {
     val stream = StreamingOps.eventsStream(spark, dir)
       .select(col("event_type"), col("value"))
     val bins = graft.ops.SketchOps.quantileSketchBins(stream)
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(bins, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(bins, OutputMode.Complete())
     graft.ops.SketchOps.quantileSketchRead(spark, drained)
   }
 
@@ -401,9 +379,7 @@ object StreamQueries {
     (spark, dir) =>
       val regs = graft.ops.SketchOps.hllRegisters(
         StreamingOps.eventsStream(spark, dir), "event_type", "event_id")
-      val drained = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToBatch(regs, OutputMode.Complete())
-      }
+      val drained = StreamingOps.drainToBatch(regs, OutputMode.Complete())
       val exact = Tables.events(spark, dir)
         .groupBy(col("event_type").as("grp"))
         .agg(count_distinct(col("event_id")).as("n_exact"))
@@ -427,9 +403,7 @@ object StreamQueries {
     val hashStream = docsStream.select(
       explode(graft.ops.TextOps.wordHashes(col("text"))).as("wh"))
     val sketch = graft.ops.SketchOps.cmsSketchFromHashes(hashStream)
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(sketch, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(sketch, OutputMode.Complete())
     val wordsBatch = Tables.documents(spark, dir)
       .select(explode(graft.ops.TextOps.words(col("text"))).as("w"))
     graft.ops.SketchOps.cmsReadback(drained, wordsBatch, 20)
@@ -462,20 +436,10 @@ object StreamQueries {
       spark, path, spark.read.parquet(path).schema)
       .filter(col("doc_id") % 5 === 4)
     val work = StreamingOps.tempSinkDir("graft_inc_dedup_")
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            DedupOps.probeIncremental(index, batch, "doc_id", "text", 0.8),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        DedupOps.probeIncremental(index, batch, "doc_id", "text", 0.8),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out", Some(outSchema))
       .orderBy(col("new_id"))
@@ -506,9 +470,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
       .select(col("win.start").as("win_start"), col("event_type"),
         col("n"), round(col("total_value"), 2).as("total_value"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(stream, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(stream, OutputMode.Complete())
       .orderBy(col("win_start"), col("event_type"))
   }
 
@@ -535,9 +497,7 @@ object StreamQueries {
       .agg(graft.functions.TopKRows.topK(
         struct((-col("value")).as("nv"), col("event_id").as("event_id")), 20)
         .as("top"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(heap, OutputMode.Complete())
-    }
+    StreamingOps.drainToBatch(heap, OutputMode.Complete())
       .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "t")))
       .select(col("event_type"), (col("pos") + 1).cast("long").as("rank"),
         col("t.event_id").as("event_id"), round(-col("t.nv"), 2).as("value"))
@@ -594,31 +554,21 @@ object StreamQueries {
         case StateName(n) => n.toLong
       }
     }
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val prev = versions().filter(_ < id).sorted.lastOption
-          val incoming = prev match {
-            case None => batch
-            case Some(v) =>
-              batch.unionByName(spark.read.parquet(s"$work/state_$v"))
-          }
-          // (us, event_id)-argmax per key: associative, so state ∪
-          // batch compaction equals whole-log compaction
-          incoming
-            .groupBy(col("user_id"))
-            .agg(max_by(struct(stateCols.map(col): _*),
-              struct(col("us"), col("event_id"))).as("w"))
-            .select(col("w.*"))
-            .write.mode("overwrite").parquet(s"$work/state_$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      val prev = versions().filter(_ < id).sorted.lastOption
+      val incoming = prev match {
+        case None => batch
+        case Some(v) =>
+          batch.unionByName(spark.read.parquet(s"$work/state_$v"))
+      }
+      // (us, event_id)-argmax per key: associative, so state ∪
+      // batch compaction equals whole-log compaction
+      incoming
+        .groupBy(col("user_id"))
+        .agg(max_by(struct(stateCols.map(col): _*),
+          struct(col("us"), col("event_id"))).as("w"))
+        .select(col("w.*"))
+        .write.mode("overwrite").parquet(s"$work/state_$id")
     }
     spark.read.parquet(s"$work/state_${versions().max}")
       .filter(col("op") === "U")
@@ -664,24 +614,14 @@ object StreamQueries {
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"),
         unix_micros(col("ts")).as("purchase_us"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            JoinOps.asofJoinNative(batch, clicks,
-              keyCol = "user_id", leftTsCol = "purchase_us",
-              rightTsCol = "click_us", rightValCols = Seq("click_id"))
-              .select(col("purchase_id"), col("user_id"), col("purchase_us"),
-                col("click_id").as("last_click_id")),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        JoinOps.asofJoinNative(batch, clicks,
+          keyCol = "user_id", leftTsCol = "purchase_us",
+          rightTsCol = "click_us", rightValCols = Seq("click_id"))
+          .select(col("purchase_id"), col("user_id"), col("purchase_us"),
+            col("click_id").as("last_click_id")),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out").orderBy(col("purchase_id"))
   }
@@ -707,21 +647,11 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") < 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            SimilarityOps.sketchTopK(batch, corpus, "vec_id", "embedding", 10,
-              bits = 256, dim = 64, maxHamming = 115),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        SimilarityOps.sketchTopK(batch, corpus, "vec_id", "embedding", 10,
+          bits = 256, dim = 64, maxHamming = 115),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out")
       .orderBy(col("query_id"), col("rank"))
@@ -749,28 +679,18 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") < 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamingOps.writeBatchDir(
-            SimilarityOps.lshKnnGraphRawMultiProbe(
-              batch, corpus, "vec_id", "embedding", 10,
-              bands = graft.queries.VectorQueries.MpwBands,
-              bandBits = graft.queries.VectorQueries.MpwBandBits,
-              dim = 64,
-              probes = graft.queries.VectorQueries.MpwProbes,
-              bucketCap = graft.queries.VectorQueries.MpwCap)
-              .select(col("query_id"), col("rank"), col("neighbor_id"),
-                round(col("cos"), 6).as("cos_sim")),
-            s"$work/out", id)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      StreamingOps.writeBatchDir(
+        SimilarityOps.lshKnnGraphRawMultiProbe(
+          batch, corpus, "vec_id", "embedding", 10,
+          bands = graft.queries.VectorQueries.MpwBands,
+          bandBits = graft.queries.VectorQueries.MpwBandBits,
+          dim = 64,
+          probes = graft.queries.VectorQueries.MpwProbes,
+          bucketCap = graft.queries.VectorQueries.MpwCap)
+          .select(col("query_id"), col("rank"), col("neighbor_id"),
+            round(col("cos"), 6).as("cos_sim")),
+        s"$work/out", id)
     }
     StreamingOps.readBatchDirs(spark, s"$work/out")
       .orderBy(col("query_id"), col("rank"))
@@ -808,29 +728,19 @@ object StreamQueries {
     val stream = StreamingOps
       .parquetStream(spark, s"$dir/embeddings.parquet", emb.schema)
       .filter(col("vec_id") >= 50)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // skip-existing anti-join makes the append replay-idempotent.
-          // refreshTable first: the appends run under foreachBatch's
-          // CLONED session, whose insert-refresh invalidates only its
-          // own catalog's relation cache — this session's cached file
-          // listing of the table would otherwise go stale after the
-          // first read and hide every subsequent append
-          spark.catalog.refreshTable(tbl)
-          val fresh = graft.sinks.Sinks.appendNewIds(
-            spark.table(tbl).select(col("neighbor_id").as("vec_id")),
-            batch, "vec_id")
-          SimilarityOps.appendSketchIndex(fresh, "vec_id", "embedding",
-            bits = 256, dim = 64, table = tbl)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, _) =>
+      // skip-existing anti-join makes the append replay-idempotent.
+      // refreshTable first: the appends run under foreachBatch's
+      // CLONED session, whose insert-refresh invalidates only its
+      // own catalog's relation cache — this session's cached file
+      // listing of the table would otherwise go stale after the
+      // first read and hide every subsequent append
+      spark.catalog.refreshTable(tbl)
+      val fresh = graft.sinks.Sinks.appendNewIds(
+        spark.table(tbl).select(col("neighbor_id").as("vec_id")),
+        batch, "vec_id")
+      SimilarityOps.appendSketchIndex(fresh, "vec_id", "embedding",
+        bits = 256, dim = 64, table = tbl)
     }
     spark.catalog.refreshTable(tbl)
     SimilarityOps.sketchTopKIndexed(
@@ -869,22 +779,12 @@ object StreamQueries {
     def prep(df: org.apache.spark.sql.DataFrame) = df
       .withColumn("day", date_trunc("day", col("ts")).cast("date"))
       .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          // per-batch overwrite directory, NOT a blind append: a
-          // replayed micro-batch (at-least-once foreachBatch after a
-          // crash) replaces its own state instead of double-counting
-          MvOps.writeBatchState(prep(batch), keys, col("cents"),
-            s"$work/state", batchId)
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, batchId) =>
+      // per-batch overwrite directory, NOT a blind append: a
+      // replayed micro-batch (at-least-once foreachBatch after a
+      // crash) replaces its own state instead of double-counting
+      MvOps.writeBatchState(prep(batch), keys, col("cents"),
+        s"$work/state", batchId)
     }
     MvOps.finalizeState(
       MvOps.mergeStates(keys, MvOps.readStateLog(spark, s"$work/state")))
@@ -951,34 +851,24 @@ object StreamQueries {
     val schema = spark.read.parquet(src).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
-    StreamingOps.withShufflePartitions(spark, 8) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val prevState = spark.read.parquet(
-            if (id == 0L) s"$work/state/seed" else s"$work/state/b${id - 1}")
-          // corpus BEFORE this batch: explicit path list (never "list
-          // the dir" — a replayed batch must not see its own vectors
-          // from the failed attempt)
-          val corpusPrev = spark.read.parquet(
-            (s"$work/corpus/seed" +: (0L until id).map(i => s"$work/corpus/b$i")): _*)
-          val out = graph(batch, corpusPrev).drop("rank")
-          val in = graph(corpusPrev.unionByName(batch), batch).drop("rank")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))
-          prevState.drop("rank").unionByName(out).unionByName(in)
-            .withColumn("rank", row_number().over(w).cast("long"))
-            .filter(col("rank") <= k)
-            .write.mode("overwrite").parquet(s"$work/state/b$id")
-          batch.write.mode("overwrite").parquet(s"$work/corpus/b$id")
-          ()
-        }
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+    StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, id) =>
+      val prevState = spark.read.parquet(
+        if (id == 0L) s"$work/state/seed" else s"$work/state/b${id - 1}")
+      // corpus BEFORE this batch: explicit path list (never "list
+      // the dir" — a replayed batch must not see its own vectors
+      // from the failed attempt)
+      val corpusPrev = spark.read.parquet(
+        (s"$work/corpus/seed" +: (0L until id).map(i => s"$work/corpus/b$i")): _*)
+      val out = graph(batch, corpusPrev).drop("rank")
+      val in = graph(corpusPrev.unionByName(batch), batch).drop("rank")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("query_id"))
+        .orderBy(col("cos").desc, col("neighbor_id"))
+      prevState.drop("rank").unionByName(out).unionByName(in)
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .write.mode("overwrite").parquet(s"$work/state/b$id")
+      batch.write.mode("overwrite").parquet(s"$work/corpus/b$id")
     }
     val lastBatch = StreamingOps.maxBatchSuffix(spark, s"$work/state", "b")
     require(lastBatch >= 1,
@@ -1008,9 +898,7 @@ object StreamQueries {
     val counts = stream.groupBy(col("cents"))
       .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("a"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("b"))
-    val drained = StreamingOps.withShufflePartitions(spark, 8) {
-      StreamingOps.drainToBatch(counts, OutputMode.Complete())
-    }
+    val drained = StreamingOps.drainToBatch(counts, OutputMode.Complete())
     DqQueries.ksReadoff(drained)
   }
 
@@ -1033,9 +921,7 @@ object StreamQueries {
           date_trunc("day", col("ts")).cast("date").as("day"))
       val counts = stream.groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).as("cnt"))
-      val drained = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToBatch(counts, OutputMode.Complete())
-      }
+      val drained = StreamingOps.drainToBatch(counts, OutputMode.Complete())
       ForecastQueries.conformalReadoff(drained)
   }
 
@@ -1198,9 +1084,7 @@ object StreamQueries {
       val sink = StreamingOps.tempSinkDir("graft_stream_late_sink_")
       lateTempDirs.add(sink)
       val agg = lateAgg(spark, src)
-      val (out, progress) = StreamingOps.withShufflePartitions(spark, 8) {
-        StreamingOps.drainToParquetSinkWithProgress(agg, sink)
-      }
+      val (out, progress) = StreamingOps.drainToParquetSink(agg, sink)
       out.count() // force the read path once so a broken drain fails HERE
       (s"$sink/out", agg.schema.toDDL, progress)
     })
@@ -1309,30 +1193,20 @@ object StreamQueries {
       val schema = spark.read.parquet(src).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      StreamingOps.withShufflePartitions(spark, 8) {
-        val q = stream.writeStream
-          .outputMode(OutputMode.Append)
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            import ss.implicits._
-            val m = batch
-              .agg(graft.functions.VectorMoments(col("embedding"), dim).as("m"))
-              .head().getSeq[Double](0)
-            // flat buffer -> (j,k,s) state rows: count (-1,-1),
-            // first moments (j,-1), second moments (j,k)
-            val rows = Seq((-1, -1, m(0))) ++
-              (0 until dim).map(j => (j, -1, m(1 + j))) ++
-              (for (j <- 0 until dim; k <- 0 until dim)
-                yield (j, k, m(1 + dim + j * dim + k)))
-            StreamingOps.writeBatchDir(
-              rows.toDF("j", "k", "s"), s"$work/state", batchId)
-            ()
-          }
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
+      StreamingOps.drainBatches(stream, s"$work/ckpt") { (batch, batchId) =>
+        val ss = batch.sparkSession
+        import ss.implicits._
+        val m = batch
+          .agg(graft.functions.VectorMoments(col("embedding"), dim).as("m"))
+          .head().getSeq[Double](0)
+        // flat buffer -> (j,k,s) state rows: count (-1,-1),
+        // first moments (j,-1), second moments (j,k)
+        val rows = Seq((-1, -1, m(0))) ++
+          (0 until dim).map(j => (j, -1, m(1 + j))) ++
+          (for (j <- 0 until dim; k <- 0 until dim)
+            yield (j, k, m(1 + dim + j * dim + k)))
+        StreamingOps.writeBatchDir(
+          rows.toDF("j", "k", "s"), s"$work/state", batchId)
       }
       // key-wise monoid merge of the batch moments, then a bounded
       // (d²+d+1)-value collect feeds the driver-side trajectory

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (SURVEY.md §2.9).
@@ -22,11 +23,6 @@ import org.apache.spark.sql.types.StructType
   */
 object StreamingOps {
 
-  /** Streaming scan of a parquet table path (S1 stand-in: swap
-    * `.format("kafka").option("subscribe", ...)` on a cluster). A
-    * single-file path works too — `basePath` is pinned to its parent
-    * directory (the file source requires a directory basePath).
-    */
   /** The events table as a stream with its `ts` column normalized via
     * [[graft.Tables.normalizeTs]] — the streaming mirror of
     * `Tables.events`, tolerant of every physical timestamp encoding the
@@ -39,6 +35,11 @@ object StreamingOps {
     graft.Tables.normalizeTs(spark, raw)
   }
 
+  /** Streaming scan of a parquet table path (S1 stand-in: swap
+    * `.format("kafka").option("subscribe", ...)` on a cluster). A
+    * single-file path works too — `basePath` is pinned to its parent
+    * directory (the file source requires a directory basePath).
+    */
   def parquetStream(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     if (!path.endsWith(".parquet")) spark.readStream.schema(schema).parquet(path)
     else {
@@ -63,109 +64,115 @@ object StreamingOps {
       .select(col("win.start").as("hour"), col("event_type"), col("n"),
         col("total_value"))
 
-  /** Scoped shuffle-partition override: stateful streaming queries
+  /** Shuffle partitions of every drain. Stateful streaming queries
     * create one state store per shuffle partition PER stateful
     * operator, so a bounded drain over bench-scale data pays fixed
-    * store/commit overhead × partitions. State partition count is
-    * fixed at FIRST query start (it is the state layout!) — size it to
-    * expected state volume, not to the session's batch default.
-    * Restores the previous value after the body.
+    * store/commit overhead × partitions. The count is fixed at a
+    * query's FIRST start (it is the state layout, recorded in the
+    * checkpoint) — sized to the drained state volume, not to the
+    * session's batch default.
     */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  private val StatePartitions = 8
+
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+  private val StateStoreProviderKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** RocksDB state store class name (bundled with Spark 4). */
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Upgrade the streaming state store to the scale-safe RocksDB
-    * provider unless the caller explicitly chose one. The default
+  /** The state store provider a drain runs on, given the session's
+    * current value: a caller-chosen provider is kept; unset or the
+    * default HDFS-backed provider is upgraded to RocksDB. The
     * HDFS-backed provider keeps every version of every store IN
     * EXECUTOR HEAP — fine at bench scale, an OOM ceiling at 100 TB
     * drained volume. RocksDB keeps state off-heap and spills to local
-    * disk, so state capacity scales with disk, not heap. State layout
-    * is fixed at FIRST query start, hence the single funnel here.
+    * disk, so state capacity scales with disk, not heap.
     */
-  def ensureScaleSafeStateStore(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val cur = spark.conf.get(key, "")
-    if (cur.isEmpty || cur.endsWith("HDFSBackedStateStoreProvider"))
-      spark.conf.set(key, RocksDbProvider)
+  private[graft] def scaleSafeProvider(current: Option[String]): String =
+    current.filter(p => p.nonEmpty && !p.endsWith("HDFSBackedStateStoreProvider"))
+      .getOrElse(RocksDbProvider)
+
+  /** The one AvailableNow drain — the bounded-drain pattern replacing
+    * the reference's empty-batch-counting stop loop. `sink` configures
+    * the writer (format, checkpoint, foreachBatch); the drain runs the
+    * stream to its end and returns the query's progress events.
+    *
+    * The state layout ([[StatePartitions]]) and the state store
+    * provider ([[scaleSafeProvider]]) are set on the stream's session
+    * from `start()` through `stop()` — foreachBatch bodies that read
+    * through the outer session plan at the same partition count — and
+    * restored (or unset, if they were unset) on exit, so a drain leaves
+    * the session's confs as it found them.
+    */
+  private def drain(stream: DataFrame, mode: OutputMode)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Seq[StreamingQueryProgress] = {
+    val conf = stream.sparkSession.conf
+    val scoped = Seq(
+      ShufflePartitionsKey -> StatePartitions.toString,
+      StateStoreProviderKey -> scaleSafeProvider(conf.getOption(StateStoreProviderKey)))
+    val explicit = conf.getAll // only confs set on the session, no defaults
+    val prev = scoped.map { case (k, _) => k -> explicit.get(k) }
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      val q = sink(stream.writeStream.outputMode(mode).trigger(Trigger.AvailableNow()))
+        .start()
+      try { q.awaitTermination(); q.recentProgress.toSeq }
+      finally q.stop()
+    } finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
-  /** Drain a streaming DataFrame through a memory sink with
-    * AvailableNow semantics and return the materialized result —
-    * the bounded-drain pattern replacing the reference's
-    * empty-batch-counting stop loop.
+  /** Drain a streaming DataFrame through a memory sink and return the
+    * drained rows as a `drain_<uuid>` temp view
+    * ([[graft.ops.Reuse.releaseAllCaches]] drops those views).
     */
   def drainToBatch(stream: DataFrame, outputMode: OutputMode = OutputMode.Append): DataFrame = {
-    ensureScaleSafeStateStore(stream.sparkSession)
     val name = "drain_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+    drain(stream, outputMode)(_.format("memory").queryName(name))
     stream.sparkSession.table(name)
   }
 
   /** Drain a streaming DataFrame through a real PARQUET FILE SINK
-    * (append-mode only — the file sink's contract) and read the
-    * committed files back via the sink's `_spark_metadata` log. This
-    * is the scale-real certification path: drained rows land in
-    * executor-written files, never on the driver, and the exactly-once
-    * story is the file sink's atomic metadata commit — unlike the
-    * memory sink, whose drained rows live in driver memory under the
-    * harness's bounded-drain contract.
+    * (append-mode only — the file sink's contract) into `<dir>/out`
+    * (checkpoint `<dir>/ckpt`) and read the committed files back via
+    * the sink's `_spark_metadata` log, together with the per-batch
+    * progress events. This is the scale-real certification path:
+    * drained rows land in executor-written files, never on the driver,
+    * and the exactly-once story is the file sink's atomic metadata
+    * commit — unlike the memory sink, whose drained rows live in driver
+    * memory under the harness's bounded-drain contract.
     * [[graft.queries.StreamQueries.q_stream_hourly_append]] certifies
     * through this path (same oracle as the memory-sink drain — the
-    * sink swap must not change the answer).
+    * sink swap must not change the answer), and
+    * [[graft.queries.StreamQueries.q_stream_late_audit]] certifies the
+    * progress events (input rows, rows dropped by the watermark
+    * late-filter) against a pure-SQL replay of the watermark protocol.
     */
-  def drainToParquetSink(stream: DataFrame, dir: String): DataFrame = {
-    ensureScaleSafeStateStore(stream.sparkSession)
-    val q = stream.writeStream
+  def drainToParquetSink(stream: DataFrame, dir: String)
+      : (DataFrame, Seq[StreamingQueryProgress]) = {
+    val progress = drain(stream, OutputMode.Append)(_
       .format("parquet")
       .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    stream.sparkSession.read
+      .option("checkpointLocation", s"$dir/ckpt"))
+    (stream.sparkSession.read
       .schema(stream.schema) // zero-row drains still have a readable schema
-      .parquet(s"$dir/out")
+      .parquet(s"$dir/out"), progress)
   }
 
-  /** [[drainToParquetSink]] that ALSO returns the per-batch progress
-    * events — the engine's own accounting (input rows, rows dropped by
-    * the watermark late-filter) that
-    * [[graft.queries.StreamQueries.q_stream_late_audit]] certifies
-    * against a pure-SQL replay of the watermark protocol.
+  /** Drain a streaming DataFrame through `foreachBatch`: `fn` receives
+    * every micro-batch with its batch id (append mode, checkpoint at
+    * `checkpointDir`). foreachBatch is at-least-once — see
+    * [[writeBatchDir]] for a replay-idempotent per-batch sink.
     */
-  def drainToParquetSinkWithProgress(stream: DataFrame, dir: String)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    ensureScaleSafeStateStore(stream.sparkSession)
-    val q = stream.writeStream
-      .format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val progress =
-      try { q.awaitTermination(); q.recentProgress.toSeq }
-      finally q.stop()
-    (stream.sparkSession.read
-      .schema(stream.schema)
-      .parquet(s"$dir/out"), progress)
+  def drainBatches(stream: DataFrame, checkpointDir: String)(
+      fn: (DataFrame, Long) => Unit): Unit = {
+    drain(stream, OutputMode.Append)(_
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(fn))
+    ()
   }
 
   /** Every [[tempSinkDir]] tree this JVM created, deleted best-effort

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import graft.sources.JsonSources
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden-shape ingestion tests: synthetic fixtures replicating the six
@@ -157,12 +158,37 @@ class GoldenSourcesSpec extends AnyFunSuite {
   test("table readers are pure: no session-conf mutation, non-UTC fails fast") {
     // the session contract (UTC zone, nanosAsLong) is pinned at BUILD
     // time by GraftSession; a reader that flips session confs breaks
-    // session co-tenants and makes read order semantically significant
-    val before = spark.conf.getAll
-    Tables.events(spark, TestSpark.sf).count()
-    graft.streaming.StreamingOps.eventsStream(spark, TestSpark.sf).schema
-    assert(spark.conf.getAll === before,
-      "a table read mutated session configuration")
+    // session co-tenants and makes read order semantically significant.
+    // Drains count as readers: each scopes its state layout and state
+    // store provider to the query and leaves the session as it found
+    // it. The provider starts UNSET so a drain that sets it without
+    // restoring shows up whatever ran before this suite.
+    import graft.streaming.StreamingOps
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getAll.get(providerKey)
+    spark.conf.unset(providerKey)
+    try {
+      val before = spark.conf.getAll
+      Tables.events(spark, TestSpark.sf).count()
+      val events = StreamingOps.eventsStream(spark, TestSpark.sf)
+      assert(StreamingOps.drainToBatch(
+        StreamingOps.hourlyCounts(events), OutputMode.Complete()).count() > 0)
+      val (appended, progress) = StreamingOps.drainToParquetSink(
+        StreamingOps.hourlyCounts(events, watermark = "1 hour"),
+        StreamingOps.tempSinkDir("graft_pure_parquet_"))
+      assert(appended.count() > 0)
+      val work = StreamingOps.tempSinkDir("graft_pure_batches_")
+      StreamingOps.drainBatches(events.select("event_id"), s"$work/ckpt") {
+        (batch, id) => StreamingOps.writeBatchDir(batch, s"$work/out", id)
+      }
+      assert(StreamingOps.readBatchDirs(spark, s"$work/out").count() ===
+        Tables.events(spark, TestSpark.sf).count())
+      assert(spark.conf.getAll === before,
+        "a table read or drain mutated session configuration")
+      // the drain's state layout, independent of the session's 4
+      // shuffle partitions
+      assert(progress.head.stateOperators.head.numShufflePartitions === 8)
+    } finally prevProvider.foreach(spark.conf.set(providerKey, _))
     // a session missing the contract is rejected loudly instead of
     // silently fixed up (the old behavior) or silently misread
     val rogue = spark.newSession()

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import graft.streaming.StreamingOps
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -36,32 +35,26 @@ class RestartSpec extends AnyFunSuite {
       .coalesce(1).write.mode("append").parquet(dir)
   }
 
-  private def drain(srcDir: String, outDir: String, ckDir: String): Unit = {
+  /** One bounded drain of the throttle over `srcDir` into `work`
+    * (sink `work/out`, checkpoint `work/ckpt`); a second drain into the
+    * same `work` resumes from the checkpoint. */
+  private def drain(srcDir: String, work: String): Unit = {
     val schema = spark.read.parquet(srcDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    val throttled = StreamingOps.streamingThrottle(spark, stream, TtlUs)
-    StreamingOps.withShufflePartitions(spark, 4) {
-      val q = throttled.writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckDir)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    }
+    StreamingOps.drainToParquetSink(
+      StreamingOps.streamingThrottle(spark, stream, TtlUs), work)
+    ()
   }
 
-  private def emitted(outDir: String): Set[(Long, String, Long)] =
-    spark.read.parquet(outDir)
+  private def emitted(work: String): Set[(Long, String, Long)] =
+    spark.read.parquet(s"$work/out")
       .select("user_id", "event_type", "event_id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
   test("throttle state survives a checkpoint restart; union == one-shot run") {
     val src = tmp("restart_src")
-    val out = tmp("restart_out")
-    val ck = tmp("restart_ck")
+    val work = tmp("restart_work")
 
     // phase 1 (two files -> two micro-batches, in-run state exercised):
     //  u1 click t0 (emit #1), t0+1h (suppressed IN-RUN)
@@ -73,8 +66,8 @@ class RestartSpec extends AnyFunSuite {
       (1L, "click", 11L, "2024-03-01 01:00:00"))
     writeEvents(src, phase1a)
     writeEvents(src, phase1b)
-    drain(src, out, ck)
-    val afterPhase1 = emitted(out)
+    drain(src, work)
+    val afterPhase1 = emitted(work)
     assert(afterPhase1 === Set((1L, "click", 10L), (2L, "view", 20L)),
       s"phase-1 emissions wrong: $afterPhase1")
 
@@ -92,8 +85,8 @@ class RestartSpec extends AnyFunSuite {
       (1L, "click", 13L, "2024-03-01 08:00:00"),
       (3L, "click", 30L, "2024-03-01 01:00:00"))
     writeEvents(src, phase2)
-    drain(src, out, ck)
-    val afterPhase2 = emitted(out)
+    drain(src, work)
+    val afterPhase2 = emitted(work)
     val expected = Set(
       (1L, "click", 10L), (2L, "view", 20L),
       (1L, "click", 13L), (3L, "click", 30L))
@@ -105,10 +98,9 @@ class RestartSpec extends AnyFunSuite {
 
     // ONE-SHOT oracle: same data, fresh checkpoint, single run — the
     // restarted union must hash-match it exactly
-    val out2 = tmp("restart_oneshot_out")
-    val ck2 = tmp("restart_oneshot_ck")
-    drain(src, out2, ck2)
-    assert(emitted(out2) === afterPhase2,
+    val work2 = tmp("restart_oneshot")
+    drain(src, work2)
+    assert(emitted(work2) === afterPhase2,
       "one-shot run diverges from the restarted union")
   }
 }

@@ -26,36 +26,37 @@ class RocksDbStateSpec extends AnyFunSuite {
       }
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     }
+    // start from an UNSET provider: RocksDB metrics can then only come
+    // from the drain's own per-query choice, never from the session
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
     spark.streams.addListener(listener)
     try {
       val drained = StreamingOps.drainToBatch(
         StreamingOps.hourlyCounts(StreamingOps.eventsStream(spark, sf)),
         OutputMode.Complete())
       assert(drained.count() > 0)
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        === StreamingOps.RocksDbProvider)
+      // the choice is scoped to the drain: the session is left unset
+      assert(!spark.conf.getAll.contains(key))
       // listener events are async — give the progress a moment to land
       val deadline = System.currentTimeMillis() + 10000
       while (!stateMetricKeys.exists(_.toLowerCase.contains("rocksdb")) &&
         System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(stateMetricKeys.exists(_.toLowerCase.contains("rocksdb")),
         s"no rocksdb state metrics in progress; saw: $stateMetricKeys")
-    } finally spark.streams.removeListener(listener)
+    } finally {
+      spark.streams.removeListener(listener)
+      prev.foreach(spark.conf.set(key, _))
+    }
   }
 
   test("an explicit caller-chosen provider is respected, HDFS default is upgraded") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key, "")
-    try {
-      spark.conf.set(key, "com.example.CustomProvider")
-      StreamingOps.ensureScaleSafeStateStore(spark)
-      assert(spark.conf.get(key) === "com.example.CustomProvider")
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      StreamingOps.ensureScaleSafeStateStore(spark)
-      assert(spark.conf.get(key) === StreamingOps.RocksDbProvider)
-    } finally {
-      if (prev.nonEmpty) spark.conf.set(key, prev) else spark.conf.unset(key)
-    }
+    assert(StreamingOps.scaleSafeProvider(Some("com.example.CustomProvider"))
+      === "com.example.CustomProvider")
+    assert(StreamingOps.scaleSafeProvider(Some(
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
+      === StreamingOps.RocksDbProvider)
+    assert(StreamingOps.scaleSafeProvider(None) === StreamingOps.RocksDbProvider)
   }
 }
